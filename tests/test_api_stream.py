@@ -14,18 +14,19 @@ import pytest
 
 from wally_spark import api
 from wally_spark.operators.stateful import KEY_COL
-from wally_spark.sinks import MemorySink
+from wally_spark.sinks import MemorySink, ParquetSink
 from wally_spark.sources import DataFrameSource
 
 SCHEMA = "ts timestamp, user_id string, value double"
 BASE = "2024-01-01 00:00:"
 
 
-def _write_batches(spark, tmpdir, batches):
-    """One parquet file per micro-batch, mtime-ordered."""
+def _write_batches(spark, tmpdir, batches, start=0):
+    """One parquet file per micro-batch, mtime-ordered; ``start``
+    numbers the files after ones an earlier call wrote."""
     path = os.path.join(tmpdir, "stream_src")
     os.makedirs(path, exist_ok=True)
-    for i, rows in enumerate(batches):
+    for i, rows in enumerate(batches, start):
         df = spark.createDataFrame(
             [(r[0], r[1], float(r[2])) for r in rows],
             "ts string, user_id string, value double",
@@ -137,6 +138,61 @@ def test_stream_state_computation(spark, tmp_path):
     got = {(r[KEY_COL], r["value"], r["running"]) for r in out.collect()}
     # state persists ACROSS micro-batches: a's running continues 1→3→6
     assert got == {("a", 1.0, 1.0), ("a", 2.0, 3.0), ("a", 3.0, 6.0), ("b", 10.0, 10.0)}
+
+
+def test_stream_state_restart_keeps_pinned_partitions(spark, tmp_path):
+    """A stateful query first started under 8 shuffle partitions (the
+    older session default) restarts from its checkpoint under the
+    session's own default: Spark keeps the 8 state partitions the
+    checkpoint pinned, and each key's running total continues where
+    the first run stopped."""
+
+    class Total:
+        def __init__(self):
+            self.t = 0.0
+
+    @api.state_computation("run_total", Total, schema="value double, running double")
+    def run_total(rec, state):
+        state.t += rec.value
+        return {"value": rec.value, "running": state.t}
+
+    out, ckpt = f"{tmp_path}/out", f"{tmp_path}/ckpt"
+
+    def run(batches, start):
+        path = _write_batches(spark, str(tmp_path), batches, start)
+        p = (
+            api.source("s", DataFrameSource("s", _stream_df(spark, path)))
+            .key_by("user_id")
+            .to(run_total)
+            .to_sink(ParquetSink(out, checkpoint=ckpt))
+        )
+        q = (
+            api.build_application("t", p).run_stream(spark)
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        run([[(BASE + "01", "a", 1), (BASE + "02", "b", 10)],
+             [(BASE + "03", "a", 2)]], 0)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", default)
+    run([[(BASE + "04", "a", 4), (BASE + "05", "b", 20)],
+         [(BASE + "06", "c", 7)]], 2)
+
+    state_parts = [d for d in os.listdir(f"{ckpt}/state/0") if d.isdigit()]
+    assert len(state_parts) == 8
+    got = {
+        (r[KEY_COL], r["value"], r["running"])
+        for r in spark.read.parquet(out).collect()
+    }
+    assert got == {
+        ("a", 1.0, 1.0), ("b", 10.0, 10.0), ("a", 2.0, 3.0),
+        ("a", 4.0, 7.0), ("b", 20.0, 30.0), ("c", 7.0, 7.0),
+    }
 
 
 def test_stream_count_windows(spark, tmp_path):

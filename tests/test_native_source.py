@@ -182,6 +182,109 @@ def test_wally_alo_native_restart_resumes_from_committed(spark, tmp_path):
         q2.stop()
 
 
+def test_busy_state_stream_stops_cleanly(spark, tmp_path):
+    """Stopping a wally_alo -> key_by -> state_computation -> TCPSink
+    query while a micro-batch is still running ends the query with no
+    exception and releases the ALO port, so a new listener can bind
+    it within seconds."""
+    import threading
+
+    import pyspark.sql.functions as F
+
+    from wally_spark import api
+    from wally_spark.sinks import TCPSink
+    from wally_spark.sources import DataFrameSource
+    from wally_spark.sources.native import register_native
+
+    class Seen:
+        def __init__(self):
+            self.n = 0
+
+    @api.state_computation("slow count", Seen, schema="message_id bigint, n bigint")
+    def slow_count(ev, state):
+        time.sleep(0.05)
+        state.n += 1
+        return {"message_id": ev.message_id, "n": state.n}
+
+    sink = socket.socket()
+    sink.bind(("127.0.0.1", 0))
+    sink.listen(8)
+    received = threading.Event()
+    rows = []
+
+    def serve():
+        while True:
+            try:
+                conn, _ = sink.accept()
+            except OSError:
+                return
+            with conn:
+                while chunk := conn.recv(65536):
+                    rows.append(chunk.count(b"\n"))
+                    received.set()
+
+    threading.Thread(target=serve, daemon=True).start()
+
+    register_native(spark)
+    port = _free_port()
+    wire = (
+        spark.readStream.format("wally_alo")
+        .option("port", port)
+        .option("cookie", "c")
+        .option("wal", str(tmp_path / "wal"))
+        .load()
+    )
+    pipeline = (
+        api.source("wire", DataFrameSource("wire", wire))
+        .to(api.computation("decode", exprs={
+            "message_id": F.col("message_id"),
+            "user": F.col("value").cast("string"),
+        }))
+        .key_by("user")
+        .to(slow_count)
+        .to_sink(TCPSink("127.0.0.1", sink.getsockname()[1]))
+    )
+    query = (
+        api.build_application("busy", pipeline).run_stream(spark)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    records = [b"u%d" % (i % 5) for i in range(420)]
+    try:
+        _push_session(port, records[:20])
+        assert received.wait(120), "no micro-batch reached the sink"
+        _push_session(port, records, start=20)
+        busy, deadline = False, time.time() + 60
+        while not busy and time.time() < deadline:
+            st = query.status
+            busy = st["isTriggerActive"] and st["isDataAvailable"]
+            time.sleep(0.05)
+        assert busy
+        time.sleep(0.5)  # into the batch's Python state tasks
+    finally:
+        query.stop()
+        sink.close()
+    assert not query.isActive
+    assert sum(rows) < len(records)  # stopped before the last batch sent
+    assert query.exception() is None
+    # the listener lives in the source's Python runner process, which
+    # Spark ends on stop without waiting for it to exit
+    deadline = time.time() + 10
+    while True:
+        rebind = socket.socket()
+        rebind.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
+        try:
+            rebind.bind(("127.0.0.1", port))
+            rebind.listen(1)
+            break
+        except OSError:
+            if time.time() > deadline:
+                raise
+            time.sleep(0.05)
+        finally:
+            rebind.close()
+
+
 def test_wally_udp_native_stream(spark, tmp_path):
     """Native UDP face: datagrams pushed at a real socket arrive as
     (seq, value) rows through readStream.format('wally_udp'), in

@@ -333,6 +333,82 @@ def test_tcp_sink_framed_stream_real_socket(spark, tmp_path):
     assert len(frames) == 9 and set(frames) == expected
 
 
+def test_tcp_sink_json_stream_real_socket(spark, tmp_path):
+    """Stream-mode TCP sink in its default JSON wire mode over a real
+    socket. Each row arrives as one ``to_json`` line with null fields
+    kept, and each non-empty micro-batch is sent from the driver on
+    one connection; an empty micro-batch opens none. Values beyond
+    JSON's own types render as ``to_json`` renders them: timestamps
+    ISO-8601 in the session time zone (``2024-01-01T00:00:01.500Z``)
+    and binary as base64 (the per-partition Python encoder this
+    replaced sent ``str()`` of the value)."""
+    conns = []
+    srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
+    srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
+    srv.bind(("127.0.0.1", 0))
+    srv.listen(8)
+    port = srv.getsockname()[1]
+
+    def serve():
+        srv.settimeout(15)
+        while True:
+            try:
+                conn, _ = srv.accept()
+            except (socket.timeout, OSError):
+                break
+            with conn:
+                buf = b""
+                while chunk := conn.recv(65536):
+                    buf += chunk
+                conns.append(buf)
+
+    t = threading.Thread(target=serve, daemon=True)
+    t.start()
+
+    schema = "id bigint, name string, flag boolean, score double, note string"
+    batches = [
+        [(1, "a", True, 1.5, None), (2, None, False, None, "x")],
+        [],
+        [(3, "c", None, -0.25, None)],
+    ]
+    src = tmp_path / "json_src"
+    src.mkdir()
+    for i, rows in enumerate(batches):
+        stage = tmp_path / f"_stage{i}"
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(stage))
+        part = next(stage.glob("*.parquet"))
+        dst = src / f"batch_{i:03d}.parquet"
+        part.rename(dst)
+        os.utime(dst, (1_000_000 + i * 100, 1_000_000 + i * 100))
+    sdf = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+    )
+    q = (
+        TCPSink("127.0.0.1", port)
+        .write_stream(sdf)
+        .option("checkpointLocation", f"{tmp_path}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    time.sleep(0.5)
+    srv.close()
+    t.join(timeout=20)
+    assert not t.is_alive()
+
+    fed = [p["numInputRows"] for p in q.recentProgress]
+    assert fed == [2, 0, 1], fed
+    assert len(conns) == 2
+    got = sorted(
+        (json.loads(line) for buf in conns for line in buf.splitlines()),
+        key=lambda r: r["id"],
+    )
+    cols = ["id", "name", "flag", "score", "note"]
+    assert got == [dict(zip(cols, r)) for b in batches for r in b]
+
+
 def test_kafka_connector_contract():
     """No broker exists in this container, so the option-building is
     pinned against golden configs for BOTH directions (reference

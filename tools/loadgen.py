@@ -339,17 +339,9 @@ class ForeachBatchCounter:
 
 
 def _spark_session():
-    from pyspark.sql import SparkSession
+    from wally_spark.session import get_spark
 
-    return (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .appName("wally-loadgen")
-        .getOrCreate()
-    )
+    return get_spark("wally-loadgen")
 
 
 # ---------------------------------------------------------------------------

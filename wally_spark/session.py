@@ -1,8 +1,12 @@
 """SparkSession factory tuned for this engine.
 
 Local testing runs on ``local[N]``; the same conf scales to a real
-cluster (AQE re-plans at runtime, shuffle partitions are a floor that
-AQE coalesces down from).
+cluster. Shuffle partitions are the engine's cores: batch shuffles
+start there and AQE coalesces down from it, and a stream's stateful
+stage (one state-store partition per shuffle partition, each a Python
+task) runs as one wave of tasks per micro-batch. A streaming query
+fixes its state partition count at its first start, so a checkpoint
+written under another count keeps that count on restart.
 """
 
 from __future__ import annotations
@@ -18,7 +22,7 @@ def get_spark(app_name: str = "wally_spark", cpus: int | None = None) -> SparkSe
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

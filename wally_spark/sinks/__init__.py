@@ -4,7 +4,6 @@ stream sinks configure a writeStream."""
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
@@ -174,14 +173,23 @@ class KafkaSink(SinkConfig):
 
 @dataclass
 class TCPSink(SinkConfig):
-    """TCPSinkConfig analog (reference lib/wallaroo/core/sink/tcp_sink):
-    rows to a socket via foreachBatch / foreachPartition — each
-    partition opens its own connection, no driver funnel. Two wire
-    modes: newline-framed JSON (default), or ``framed=True`` sending a
-    pre-encoded binary ``frame`` column (functions/framing.encode_frame,
-    the reference's length-prefixed wire format) as raw bytes.
-    ``dry_run`` collects locally for tests instead of opening sockets.
-    Real-socket round-trips are tested in tests/test_sources_sinks.py."""
+    """TCPSinkConfig analog (reference lib/wallaroo/core/sink/tcp_sink).
+    Rows are encoded in Catalyst, in one of two wire modes:
+    newline-framed JSON (default: ``to_json`` over every column with
+    nulls kept, so timestamps render ISO-8601 and binary base64), or
+    ``framed=True`` sending a pre-encoded binary ``frame`` column
+    (functions/framing.encode_frame, the reference's length-prefixed
+    wire format) as raw bytes.
+
+    A batch write sends per partition, each task on its own
+    connection. A stream collects each micro-batch's encoded column
+    and sends it from the driver, one connection per non-empty
+    micro-batch: a per-partition Python task would cost more than the
+    encoded rows of a latency-bound micro-batch. Fan-out at volume
+    belongs to KafkaSink, the external sinks and the ``wally_tcp``
+    native sink. ``dry_run`` collects the rows locally for tests
+    instead of opening sockets. Real-socket round-trips are tested in
+    tests/test_sources_sinks.py."""
 
     host: str
     port: int
@@ -189,15 +197,20 @@ class TCPSink(SinkConfig):
     framed: bool = False
     captured: list = field(default_factory=list)
 
-    def _send_partition(self, rows):
+    def _encode(self, df):
+        if self.framed:
+            line = F.col("frame")
+        else:
+            line = F.concat(
+                F.to_json(F.struct(*df.columns), {"ignoreNullFields": "false"}),
+                F.lit("\n"),
+            ).cast("binary")
+        return df.select(line.alias("payload"))
+
+    def _send(self, rows):
         import socket
 
-        if self.framed:
-            payload = b"".join(bytes(r["frame"]) for r in rows)
-        else:
-            payload = "".join(
-                json.dumps(r.asDict(), default=str) + "\n" for r in rows
-            ).encode()
+        payload = b"".join(r[0] for r in rows)
         if not payload:
             return
         with socket.create_connection((self.host, self.port), timeout=10) as s:
@@ -207,7 +220,7 @@ class TCPSink(SinkConfig):
         if self.dry_run:
             self.captured.extend(df.collect())
             return df
-        df.foreachPartition(self._send_partition)
+        self._encode(df).foreachPartition(self._send)
         return df
 
     def write_stream(self, df):
@@ -215,7 +228,7 @@ class TCPSink(SinkConfig):
             if self.dry_run:
                 self.captured.extend(batch_df.collect())
             else:
-                batch_df.foreachPartition(self._send_partition)
+                self._send(self._encode(batch_df).collect())
 
         return df.writeStream.foreachBatch(handle)
 

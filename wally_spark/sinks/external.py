@@ -6,7 +6,7 @@ process draining the engine's output into a service client call per
 record; the Spark-first analog is ``foreachPartition`` — every
 PARTITION opens its own client and drains its rows, so the write path
 scales with the executor count and never funnels through the driver
-(the TCPSink pattern, sinks/__init__.py).
+(as TCPSink's batch writes, sinks/__init__.py).
 
 Every sink takes a ``client_factory`` (or ``connection_factory``):
 the zero-arg callable each partition invokes to build its client.

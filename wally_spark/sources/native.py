@@ -556,14 +556,15 @@ class WallyUDPDataSource(DataSource):
 
 
 class TCPStreamWriter(DataSourceStreamWriter):
-    """Per-partition TCP writer: each task opens its own connection
-    (no driver funnel — the TCPSink contract of sinks/__init__.py,
-    now as a first-class v2 sink). Wire modes match TCPSink: newline
-    JSON (default) or ``framed`` raw bytes from a binary ``frame``
-    column (functions/framing.encode_frame, the reference's
-    length-prefixed format). Delivery is at-least-once under task
-    retry — the reference connector protocol's own guarantee; pair
-    with a receiver-side dedup key when exactly-once matters."""
+    """Per-partition TCP writer: each task opens its own connection,
+    no driver funnel (the fan-out face; TCPSink sends a stream's
+    micro-batches from the driver). Wire modes as TCPSink's: newline
+    JSON (default, encoded here in Python) or ``framed`` raw bytes
+    from a binary ``frame`` column (functions/framing.encode_frame,
+    the reference's length-prefixed format). Delivery is at-least-once
+    under task retry — the reference connector protocol's own
+    guarantee; pair with a receiver-side dedup key when exactly-once
+    matters."""
 
     def __init__(self, options: dict):
         self._host = options.get("host", "127.0.0.1")
