@@ -495,3 +495,23 @@ def test_alo_native_buffer_lands_event_time_and_key():
         assert lst.buf[1][1] == (1, 1, 222, None, b"v1")
     finally:
         lst.stop()
+
+
+def test_alo_listener_waits_for_a_held_port():
+    """A listener started while its port is still held — a stopped
+    query's source runner process lets go of it a moment later — comes
+    up once the port is released, instead of failing on EADDRINUSE."""
+    import threading
+
+    from wally_spark.sources.native import _ALOListener
+
+    holder = socket.socket()
+    holder.bind(("127.0.0.1", 0))
+    holder.listen(1)
+    port = holder.getsockname()[1]
+    threading.Timer(0.3, holder.close).start()
+    lst = _ALOListener("127.0.0.1", port, "held", ack_every=4)
+    try:
+        _connect_with_retry(port).close()
+    finally:
+        lst.stop()

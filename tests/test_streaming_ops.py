@@ -2532,3 +2532,90 @@ def test_decode_check_streaming_equivalence(spark, tmp_path):
     assert len(corpus_dirs(spark, f"{store}/dw")) == 2
     fn(spark.createDataFrame(batches[1], schema), 1)
     assert face_rows() == final
+
+
+def test_keyed_state_folds_across_arrow_chunks_in_order(spark, tmp_path):
+    """One key's rows of a micro-batch reach the state fold in
+    (ts, event_id) order even when Arrow splits them into several
+    chunks: the rows arrive in reverse, two to a chunk, and the state
+    step, the pane operator and the count window must each see
+    1,2,3,4,5,6."""
+    from tests.test_api_stream import PySumAgg
+    from wally_spark import api
+    from wally_spark.operators.stateful import KEY_COL
+    from wally_spark.sinks import MemorySink
+    from wally_spark.sources import DataFrameSource
+
+    class Seen:
+        def __init__(self):
+            self.n = 0
+
+    @api.state_computation("order", Seen, schema="value double, pos bigint")
+    def order(rec, state):
+        state.n += 1
+        return {"value": rec.value, "pos": state.n}
+
+    class OrderAgg(PySumAgg):
+        output_schema = "seq string"
+
+        def initial_accumulator(self):
+            return []
+
+        def update(self, data, acc):
+            acc.append(int(data.value))
+
+        def output(self, key, acc):
+            return {"seq": ",".join(map(str, acc))}
+
+    # batch 1: one key, ts 06 down to 01; batch 2: a far row that
+    # closes the pane [0,10)
+    path = _write_batches(
+        spark,
+        str(tmp_path),
+        [
+            [(BASE + f"0{i}", "a", i) for i in range(6, 0, -1)],
+            [(BASE + "50", "a", 50)],
+        ],
+    )
+
+    def run(step):
+        name = f"t_{uuid.uuid4().hex[:8]}"
+        p = (
+            api.source("s", DataFrameSource("s", _stream_df(spark, path)))
+            .key_by("user_id")
+            .to(step)
+            .to_sink(MemorySink(name))
+        )
+        return _run(api.build_application("t", p).run_stream(spark), spark, name)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        state = run(order).collect()
+        panes = run(api.range_windows(api.seconds(10)).over(OrderAgg)).collect()
+        counts = run(api.count_windows(6).over(OrderAgg)).collect()
+    finally:
+        spark.conf.set(key, prev)
+
+    assert sorted((r["value"], r["pos"]) for r in state) == [
+        (1.0, 1), (2.0, 2), (3.0, 3), (4.0, 4), (5.0, 5), (6.0, 6), (50.0, 7)
+    ]
+    assert [(r[KEY_COL], r["seq"]) for r in panes] == [("a", "1,2,3,4,5,6")]
+    assert [(r["win_seq"], r["seq"]) for r in counts] == [(0, "1,2,3,4,5,6")]
+
+
+def test_applyinpandaswithstate_has_one_call_site():
+    """Every streaming per-key state operator goes through the one
+    primitive in operators/stateful.py; a second call site would fork
+    its state format, row order and expiry."""
+    from pathlib import Path
+
+    import wally_spark
+
+    root = Path(wally_spark.__file__).parent
+    calls = {
+        str(p.relative_to(root)): p.read_text().count("applyInPandasWithState(")
+        for p in root.rglob("*.py")
+    }
+    assert {f: n for f, n in calls.items() if n} == {"operators/stateful.py": 1}

@@ -5,9 +5,15 @@ Batch: applyInPandas per key — rows are replayed in event order
 through the user's (data, state) function, exactly the semantics a
 Wallaroo state step sees; distributed by key hash, no driver loops.
 
-Streaming: applyInPandasWithState — the state object is pickled into
-the state store between micro-batches, giving the same continuous
-per-key state across triggers.
+Streaming: one primitive, ``_keyed_state``, carries every per-key
+stream state step in the package (``run_state_stream``, the pane and
+count-window operators in ``operators/windows.py`` and the twins in
+``streaming/ops.py``). It is the only applyInPandasWithState call:
+it keeps each key's state as one cloudpickled ``blob binary`` column
+in the state store between micro-batches, hands the operator's fold
+the key's rows of the micro-batch in (ts, event_id) order, builds the
+output frame and runs the optional event-time expiry. An operator
+supplies only its fold and, when it expires keys, its final rows.
 """
 
 from __future__ import annotations
@@ -21,9 +27,13 @@ from pyspark.sql import DataFrame
 KEY_COL = "__key"
 
 
-def _sort_cols(pdf: pd.DataFrame) -> list[str]:
+def _in_order(chunks) -> pd.DataFrame:
+    """One key's rows in (ts, event_id) order — whichever of the two
+    the frame has — by one stable sort across all of its chunks."""
+    chunks = list(chunks)
+    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
     cols = [c for c in ("ts", "event_id") if c in pdf.columns]
-    return cols
+    return pdf.sort_values(cols, kind="mergesort") if cols else pdf
 
 
 def _records(pdf: pd.DataFrame):
@@ -31,12 +41,10 @@ def _records(pdf: pd.DataFrame):
         yield SimpleNamespace(**t._asdict())
 
 
-def _apply_state_fn(fn, state_class, is_multi, pdf: pd.DataFrame, key: str, state=None):
-    state = state if state is not None else state_class()
+def _apply_state_fn(fn, is_multi, pdf: pd.DataFrame, key: str, state):
+    """Replay ``pdf`` (already in order) through the user's state
+    function; returns the output rows as dicts."""
     out = []
-    sort_cols = _sort_cols(pdf)
-    if sort_cols:
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
     for rec in _records(pdf):
         res = fn(rec, state)
         if res is None:
@@ -46,7 +54,66 @@ def _apply_state_fn(fn, state_class, is_multi, pdf: pd.DataFrame, key: str, stat
             d = dict(r) if isinstance(r, dict) else vars(r)
             d[KEY_COL] = key
             out.append(d)
-    return out, state
+    return out
+
+
+def _keyed_state(
+    df: DataFrame, key_col: str, out_schema: str, init, fold,
+    expiry=None, on_timeout=None,
+) -> DataFrame:
+    """The per-key stream state operator, over ``df`` grouped by
+    ``key_col``. Per key and micro-batch:
+
+    - the state is loaded from its ``blob binary`` column (cloudpickle),
+      or is ``init()`` for a key without one;
+    - ``fold(key, rows, state)`` returns ``(state, out)``: ``rows`` is
+      every row of the key in the micro-batch, in (ts, event_id) order
+      across Arrow chunks; ``out`` is a list of rows, tuples in
+      ``out_schema`` order or dicts by column name;
+    - the state is stored back and ``out`` emitted.
+
+    ``expiry(rows, state)`` turns on event-time expiry (it needs a
+    watermark upstream): it gives the key's timeout in epoch ms after
+    each fold, or None for none. When the watermark passes it, the
+    key's state is removed and ``on_timeout(key, state)``, if given,
+    returns the key's final rows."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    cols = [c.strip().split()[0] for c in out_schema.split(",")]
+
+    def load(group_state):
+        (blob,) = group_state.get
+        return pickle.loads(bytes(blob))
+
+    def runner(key_tuple, chunks, group_state):
+        key = key_tuple[0]
+        if group_state.hasTimedOut:
+            out = []
+            if on_timeout is not None and group_state.exists:
+                out = on_timeout(key, load(group_state))
+            group_state.remove()
+        else:
+            rows = _in_order(chunks)
+            state = load(group_state) if group_state.exists else init()
+            state, out = fold(key, rows, state)
+            group_state.update((pickle.dumps(state),))
+            ms = expiry(rows, state) if expiry is not None else None
+            if ms is not None:
+                group_state.setTimeoutTimestamp(ms)
+        if out:
+            yield pd.DataFrame(out, columns=cols)
+
+    return df.groupBy(key_col).applyInPandasWithState(
+        runner,
+        outputStructType=out_schema,
+        stateStructType="blob binary",
+        outputMode="append",
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if expiry is None
+            else GroupStateTimeout.EventTimeTimeout
+        ),
+    )
 
 
 def run_state_batch(df: DataFrame, comp, out_schema: str) -> DataFrame:
@@ -55,8 +122,8 @@ def run_state_batch(df: DataFrame, comp, out_schema: str) -> DataFrame:
 
     def runner(key_tuple, pdf: pd.DataFrame):
         key = key_tuple[0]
-        out, _ = _apply_state_fn(
-            comp.fn, comp.state_class, comp.is_multi, pdf, key
+        out = _apply_state_fn(
+            comp.fn, comp.is_multi, _in_order([pdf]), key, comp.state_class()
         )
         return pd.DataFrame(out) if out else pd.DataFrame(
             {c.strip().split()[0]: pd.Series(dtype="object") for c in out_schema.split(",")}
@@ -68,8 +135,8 @@ def run_state_batch(df: DataFrame, comp, out_schema: str) -> DataFrame:
 def run_state_stream(
     df: DataFrame, comp, out_schema: str, state_ttl_gap_s: int | None = None
 ) -> DataFrame:
-    """applyInPandasWithState with pickled user state across
-    micro-batches.
+    """The user's state function per key, its state carried across
+    micro-batches by ``_keyed_state``.
 
     Default (``state_ttl_gap_s=None``) matches the reference: a key's
     state lives until the query stops. At 100 TB with unbounded key
@@ -78,52 +145,16 @@ def run_state_stream(
     requires a watermark upstream). An expired key restarts from a
     fresh ``state_class()`` on its next event.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    state_schema = "blob binary"
-    cols = [c.strip().split()[0] for c in out_schema.split(",")]
+    def fold(key, rows, state):
+        return state, _apply_state_fn(comp.fn, comp.is_multi, rows, key, state)
 
-    def runner(key_tuple, pdfs, group_state):
-        key = key_tuple[0]
-        if group_state.hasTimedOut:
-            group_state.remove()  # idle past TTL: drop the key's state
-            yield pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
-            return
-        if group_state.exists:
-            (blob,) = group_state.get
-            state = pickle.loads(bytes(blob))
-        else:
-            state = comp.state_class()
-        all_out = []
-        last_ts = None
-        for pdf in pdfs:
-            out, state = _apply_state_fn(
-                comp.fn, comp.state_class, comp.is_multi, pdf, key, state
-            )
-            all_out.extend(out)
-            if state_ttl_gap_s is not None and "ts" in pdf.columns and len(pdf):
-                m = pdf["ts"].max()
-                last_ts = m if last_ts is None else max(last_ts, m)
-        group_state.update((pickle.dumps(state),))
-        if state_ttl_gap_s is not None and last_ts is not None:
-            expiry_ms = (
-                int(pd.Timestamp(last_ts).value // 1_000_000)
-                + state_ttl_gap_s * 1000
-            )
-            group_state.setTimeoutTimestamp(expiry_ms)
-        yield pd.DataFrame(all_out) if all_out else pd.DataFrame(
-            {c: pd.Series(dtype="object") for c in cols}
-        )
+    expiry = None
+    if state_ttl_gap_s is not None:
+        def expiry(rows, state):
+            if "ts" not in rows.columns or not len(rows):
+                return None
+            last_ms = int(pd.Timestamp(rows["ts"].max()).value // 1_000_000)
+            return last_ms + state_ttl_gap_s * 1000
 
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout
-        if state_ttl_gap_s is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return df.groupBy(KEY_COL).applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
+    return _keyed_state(df, KEY_COL, out_schema, comp.state_class, fold, expiry)

@@ -11,23 +11,23 @@ Streaming:
   range windows fast path — withWatermark + F.window groupBy agg
     (late policy: drop — Spark's watermark drop matches
     LateDataPolicy.drop, late_data_policy.pony:3).
-  custom pane operator — applyInPandasWithState re-creating the
-    reference's pane semantics (panes_range_windows.pony) including
-    fire_per_message and place_in_oldest_window late policies.
-  count windows — applyInPandasWithState incremental accumulator that
-    fires every N records per key.
+  custom pane operator and count windows — folds over the one per-key
+    stream state primitive, ``operators.stateful._keyed_state``, which
+    keeps their state between micro-batches and hands them each key's
+    rows in (ts, event_id) order. The pane fold re-creates the
+    reference's pane semantics (panes_range_windows.pony) including the
+    fire_per_message and place_in_oldest_window late policies; the
+    count fold fires every N records per key.
 """
 
 from __future__ import annotations
-
-from pyspark import cloudpickle as pickle
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from wally_spark.api import LateDataPolicy, _ns_to_spark_interval
-from wally_spark.operators.stateful import KEY_COL, _records, _sort_cols
+from wally_spark.operators.stateful import KEY_COL, _in_order, _keyed_state, _records
 
 TS_COL = "ts"
 WINDOW_START = "window_start"
@@ -75,10 +75,7 @@ def range_windows_batch(df: DataFrame, win) -> DataFrame:
     def runner(key_tuple, pdf: pd.DataFrame):
         key, ws = key_tuple
         acc = agg.initial_accumulator()
-        sc = _sort_cols(pdf)
-        if sc:
-            pdf = pdf.sort_values(sc, kind="mergesort")
-        for rec in _records(pdf):
+        for rec in _records(_in_order([pdf])):
             agg.update(rec, acc)
         res = agg.output(key, acc)
         if res is None:
@@ -118,10 +115,7 @@ def count_windows_batch(df: DataFrame, win) -> DataFrame:
         if len(pdf) < win.count:  # only full windows fire
             return pd.DataFrame({c: pd.Series(dtype="object") for c in _out_cols(out_schema)})
         acc = agg.initial_accumulator()
-        sc = _sort_cols(pdf)
-        if sc:
-            pdf = pdf.sort_values(sc, kind="mergesort")
-        for rec in _records(pdf):
+        for rec in _records(_in_order([pdf])):
             agg.update(rec, acc)
         res = agg.output(key, acc)
         if res is None:
@@ -175,9 +169,7 @@ def range_windows_stream_panes(df: DataFrame, win) -> DataFrame:
     the reference's three policies (panes_range_windows.pony:148-170).
 
     Output mode append: a pane fires once, when the key's watermark
-    passes its end."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    passes its end. State per key: (panes, max event µs)."""
     agg = win.aggregation
     if agg.output_schema is None:
         raise ValueError("pane-path Aggregation needs output_schema")
@@ -191,13 +183,8 @@ def range_windows_stream_panes(df: DataFrame, win) -> DataFrame:
         base = us // s_us * s_us
         return [base - k * s_us for k in range(n_win) if us < base - k * s_us + r_us]
 
-    def runner(key_tuple, pdfs, group_state):
-        key = key_tuple[0]
-        if group_state.exists:
-            (blob,) = group_state.get
-            panes, max_us = pickle.loads(bytes(blob))
-        else:
-            panes, max_us = {}, -(1 << 62)
+    def fold(key, rows, state):
+        panes, max_us = state
         out = []
 
         def fire(ws_us, acc):
@@ -208,91 +195,64 @@ def range_windows_stream_panes(df: DataFrame, win) -> DataFrame:
                 d[WINDOW_START] = pd.Timestamp(ws_us, unit="us")
                 out.append(d)
 
-        for pdf in pdfs:
-            sc = _sort_cols(pdf)
-            if sc:
-                pdf = pdf.sort_values(sc, kind="mergesort")
-            for rec in _records(pdf):
-                us = int(pd.Timestamp(rec.ts).value // 1000)
-                max_us = max(max_us, us)
-                wm = max_us - delay_us
-                live = [ws for ws in assign(us) if ws + r_us > wm]
-                if live:
-                    for ws in live:
-                        acc = panes.get(ws)
-                        if acc is None:
-                            acc = agg.initial_accumulator()
-                            panes[ws] = acc
-                        agg.update(rec, acc)
-                else:  # late record: every containing window already fired
-                    if policy == LateDataPolicy.DROP:
-                        continue
-                    if policy == LateDataPolicy.FIRE_PER_MESSAGE:
+        for rec in _records(rows):
+            us = int(pd.Timestamp(rec.ts).value // 1000)
+            max_us = max(max_us, us)
+            wm = max_us - delay_us
+            live = [ws for ws in assign(us) if ws + r_us > wm]
+            if live:
+                for ws in live:
+                    acc = panes.get(ws)
+                    if acc is None:
+                        acc = agg.initial_accumulator()
+                        panes[ws] = acc
+                    agg.update(rec, acc)
+            else:  # late record: every containing window already fired
+                if policy == LateDataPolicy.DROP:
+                    continue
+                if policy == LateDataPolicy.FIRE_PER_MESSAGE:
+                    acc = agg.initial_accumulator()
+                    agg.update(rec, acc)
+                    fire(assign(us)[-1], acc)
+                elif policy == LateDataPolicy.PLACE_IN_OLDEST_WINDOW:
+                    if panes:
+                        agg.update(rec, panes[min(panes)])
+                    else:
                         acc = agg.initial_accumulator()
                         agg.update(rec, acc)
-                        fire(assign(us)[-1], acc)
-                    elif policy == LateDataPolicy.PLACE_IN_OLDEST_WINDOW:
-                        if panes:
-                            agg.update(rec, panes[min(panes)])
-                        else:
-                            acc = agg.initial_accumulator()
-                            agg.update(rec, acc)
-                            panes[min(assign(us))] = acc
+                        panes[min(assign(us))] = acc
         wm = max_us - delay_us
         for ws in sorted([w for w in panes if w + r_us <= wm]):
             fire(ws, panes.pop(ws))
-        group_state.update((pickle.dumps((panes, max_us)),))
-        cols = _out_cols(out_schema)
-        yield pd.DataFrame(out) if out else pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
+        return (panes, max_us), out
 
-    return df.groupBy(KEY_COL).applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(df, KEY_COL, out_schema, lambda: ({}, -(1 << 62)), fold)
 
 
 def count_windows_stream(df: DataFrame, win) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    """Per-key count windows that fire on every ``win.count``-th
+    record. State per key: (accumulator, records in it, window seq)."""
     agg = win.aggregation
     if agg.output_schema is None:
         raise ValueError("count_windows Aggregation needs output_schema")
     out_schema = f"{KEY_COL} string, win_seq bigint, " + agg.output_schema
 
-    def runner(key_tuple, pdfs, group_state):
-        key = key_tuple[0]
-        if group_state.exists:
-            (blob,) = group_state.get
-            acc, n, seq = pickle.loads(bytes(blob))
-        else:
-            acc, n, seq = agg.initial_accumulator(), 0, 0
+    def fold(key, rows, state):
+        acc, n, seq = state
         out = []
-        for pdf in pdfs:
-            sc = _sort_cols(pdf)
-            if sc:
-                pdf = pdf.sort_values(sc, kind="mergesort")
-            for rec in _records(pdf):
-                agg.update(rec, acc)
-                n += 1
-                if n == win.count:
-                    res = agg.output(key, acc)
-                    if res is not None:
-                        d = dict(res) if isinstance(res, dict) else vars(res)
-                        d[KEY_COL] = key
-                        d["win_seq"] = seq
-                        out.append(d)
-                    acc, n, seq = agg.initial_accumulator(), 0, seq + 1
-        group_state.update((pickle.dumps((acc, n, seq)),))
-        cols = _out_cols(out_schema)
-        yield pd.DataFrame(out) if out else pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
+        for rec in _records(rows):
+            agg.update(rec, acc)
+            n += 1
+            if n == win.count:
+                res = agg.output(key, acc)
+                if res is not None:
+                    d = dict(res) if isinstance(res, dict) else vars(res)
+                    d[KEY_COL] = key
+                    d["win_seq"] = seq
+                    out.append(d)
+                acc, n, seq = agg.initial_accumulator(), 0, seq + 1
+        return (acc, n, seq), out
 
-    return df.groupBy(KEY_COL).applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        df, KEY_COL, out_schema, lambda: (agg.initial_accumulator(), 0, 0), fold
     )

@@ -54,11 +54,13 @@ log plays for Spark's own file source. On a multi-node cluster point
 from __future__ import annotations
 
 import base64
+import errno
 import json
 import os
 import socket
 import tempfile
 import threading
+import time
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -81,6 +83,11 @@ _SCHEMA = (
     "stream_id bigint, message_id bigint, event_time bigint,"
     " key binary, value binary"
 )
+# How long an ALO listener retries a port that is still in use. Spark
+# ends a stopped query's source runner process without calling the
+# reader's stop(), so a query restarted on the same port can find it
+# held for a moment by the old listener.
+BIND_RETRY_S = 5.0
 
 
 class _ALOListener:
@@ -115,7 +122,16 @@ class _ALOListener:
         )
         self._lsock = socket.socket()
         self._lsock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._lsock.bind((host, port))
+        deadline = time.monotonic() + BIND_RETRY_S
+        while True:
+            try:
+                self._lsock.bind((host, port))
+                break
+            except OSError as e:
+                if e.errno != errno.EADDRINUSE or time.monotonic() > deadline:
+                    self._lsock.close()
+                    raise
+                time.sleep(0.05)
         self._lsock.listen(8)
         self._stop = threading.Event()
         self._thread = threading.Thread(
@@ -282,7 +298,8 @@ class ALOStreamReader(SimpleDataSourceStreamReader):
         self._cookie = options.get("cookie", "")
         self._ack_every = int(options.get("ack_every", "4"))
         # credit window = max client in-flight messages: the throughput
-        # knob for pipelined senders (tools/loadgen.py measures it)
+        # knob for pipelined senders (perfbench's stream_state sender
+        # runs with a window of perfbench.loadgen.CREDITS)
         self._credits = int(options.get("credits", "16"))
         wal_dir = options.get(
             "wal",

@@ -2,9 +2,9 @@
 DataStreamWriter from the sink config. The caller starts it
 (``.start()``) and owns the StreamingQuery lifecycle.
 
-Stage lowering mirrors the batch compiler; stateful pieces use the
-Structured Streaming state store (applyInPandasWithState) instead of
-per-group replay."""
+Stage lowering mirrors the batch compiler; stateful pieces keep their
+per-key state in the Structured Streaming state store through
+``operators.stateful._keyed_state`` instead of per-group replay."""
 
 from __future__ import annotations
 

@@ -5,6 +5,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from wally_spark.operators.stateful import _keyed_state
+
 
 def dedup_stream(df: DataFrame, keys: list[str], ts: str, watermark: str) -> DataFrame:
     """Exactly-once-per-key delivery within the watermark horizon —
@@ -45,52 +47,23 @@ def inactivity_sessions_classic(df: DataFrame, gap_s: int) -> DataFrame:
     """
     import pandas as pd
 
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     out_schema = "user_id string, session_start_s long, n_events long, total double"
 
-    def runner(key, pdfs, state):
-        user = key[0]
-        if state.hasTimedOut:
-            if state.exists:
-                (blob,) = state.get
-                start_s, last_s, n, total = cloudpickle.loads(bytes(blob))
-                state.remove()
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user],
-                        "session_start_s": [start_s],
-                        "n_events": [n],
-                        "total": [round(total, 2)],
-                    }
-                )
-            return
-        if state.exists:
-            (blob,) = state.get
-            start_s, last_s, n, total = cloudpickle.loads(bytes(blob))
-        else:
-            start_s, last_s, n, total = None, None, 0, 0.0
-        for pdf in pdfs:
-            for ts, value in zip(pdf["ts"], pdf["value"]):
-                s = int(pd.Timestamp(ts).value // 1_000_000_000)
-                start_s = s if start_s is None else min(start_s, s)
-                last_s = s if last_s is None else max(last_s, s)
-                n += 1
-                total += float(value)
-        state.update((cloudpickle.dumps((start_s, last_s, n, total)),))
-        # close the session once the watermark passes last event + gap
-        state.setTimeoutTimestamp((last_s + gap_s) * 1000)
-        yield pd.DataFrame(
-            {c.split()[0].strip(): pd.Series(dtype="object") for c in out_schema.split(",")}
-        )
+    def fold(user, rows, state):
+        start_s, last_s, n, total = state
+        for ts, value in zip(rows["ts"], rows["value"]):
+            s = int(pd.Timestamp(ts).value // 1_000_000_000)
+            start_s = s if start_s is None else min(start_s, s)
+            last_s = s if last_s is None else max(last_s, s)
+            n += 1
+            total += float(value)
+        return (start_s, last_s, n, total), []
 
-    return df.groupBy("user_id").applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _keyed_state(
+        df, "user_id", out_schema, lambda: (None, None, 0, 0.0), fold,
+        # close the session once the watermark passes last event + gap
+        expiry=lambda rows, s: (s[1] + gap_s) * 1000,
+        on_timeout=lambda user, s: [(user, s[0], s[2], round(s[3], 2))],
     )
 
 
@@ -117,76 +90,35 @@ def session_entry_exit_stream(df: DataFrame, gap_s: int = 600) -> DataFrame:
     session."""
     import pandas as pd
 
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     out_schema = (
         "user_id long, entry_type string, exit_type string, n_events long"
     )
     gap_ns = int(gap_s) * 1_000_000_000
 
-    def runner(key, pdfs, state):
-        user = key[0]
+    def row(user, sess):
+        return (user, sess[2], sess[5], sess[6])
 
-        def row(sess):
-            entry_type, exit_type, n = sess[2], sess[5], sess[6]
-            return {
-                "user_id": [user],
-                "entry_type": [entry_type],
-                "exit_type": [exit_type],
-                "n_events": [n],
-            }
-
-        if state.hasTimedOut:
-            if state.exists:
-                (blob,) = state.get
-                sess = cloudpickle.loads(bytes(blob))
-                state.remove()
-                yield pd.DataFrame(row(sess))
-            return
-
-        if state.exists:
-            (blob,) = state.get
-            sess = list(cloudpickle.loads(bytes(blob)))
-        else:
-            sess = None
-        events = []
-        for pdf in pdfs:
-            for ts, eid, etype in zip(
-                pdf["ts"], pdf["event_id"], pdf["event_type"]
-            ):
-                events.append((int(pd.Timestamp(ts).value), int(eid), etype))
-        events.sort()
+    def fold(user, rows, state):
+        sess = None if state is None else list(state)
         closed = []
-        for ts_ns, eid, etype in events:
+        for ts, eid, etype in zip(
+            rows["ts"], rows["event_id"], rows["event_type"]
+        ):
+            ts_ns, eid = int(pd.Timestamp(ts).value), int(eid)
             if sess is None:
                 sess = [ts_ns, eid, etype, ts_ns, eid, etype, 1]
             elif ts_ns - sess[3] > gap_ns:
-                closed.append(sess)
+                closed.append(row(user, sess))
                 sess = [ts_ns, eid, etype, ts_ns, eid, etype, 1]
             else:
                 sess[3], sess[4], sess[5] = ts_ns, eid, etype
                 sess[6] += 1
-        if sess is None:  # no prior state and an empty batch slice
-            return
-        state.update((cloudpickle.dumps(tuple(sess)),))
-        state.setTimeoutTimestamp(sess[3] // 1_000_000 + gap_s * 1000)
-        if closed:
-            out = {
-                "user_id": [], "entry_type": [], "exit_type": [],
-                "n_events": [],
-            }
-            for s in closed:
-                for k, v in row(s).items():
-                    out[k].extend(v)
-            yield pd.DataFrame(out)
+        return tuple(sess), closed
 
-    return df.groupBy("user_id").applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _keyed_state(
+        df, "user_id", out_schema, lambda: None, fold,
+        expiry=lambda rows, s: s[3] // 1_000_000 + gap_s * 1000,
+        on_timeout=lambda user, s: [row(user, s)],
     )
 
 
@@ -211,28 +143,14 @@ def funnel_stage_stream(df: DataFrame, horizon_s: int = 3600) -> DataFrame:
     (ts, event_id) — the batch lane's min()-based tie rule."""
     import pandas as pd
 
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     out_schema = "user_id long, stage long, ver long"
     horizon_ns = int(horizon_s) * 1_000_000_000
 
-    def runner(key, pdfs, state):
-        user = key[0]
-        if state.exists:
-            (blob,) = state.get
-            stage, t0, t1, ver, emitted = cloudpickle.loads(bytes(blob))
-        else:
-            stage, t0, t1, ver, emitted = 0, None, None, 0, -1
-        events = []
-        for pdf in pdfs:
-            for ts, eid, etype in zip(
-                pdf["ts"], pdf["event_id"], pdf["event_type"]
-            ):
-                events.append((int(pd.Timestamp(ts).value), int(eid), etype))
-        events.sort()
-        out_rows = []
-        for ts_ns, _eid, etype in events:
+    def fold(user, rows, state):
+        stage, t0, t1, ver, emitted = state
+        out = []
+        for ts, etype in zip(rows["ts"], rows["event_type"]):
+            ts_ns = int(pd.Timestamp(ts).value)
             if stage == 0 and etype == "view":
                 stage, t0 = 1, ts_ns
             elif (
@@ -251,22 +169,11 @@ def funnel_stage_stream(df: DataFrame, horizon_s: int = 3600) -> DataFrame:
             if stage != emitted:
                 ver += 1
                 emitted = stage
-                out_rows.append((user, stage, ver))
-        if events:
-            state.update(
-                (cloudpickle.dumps((stage, t0, t1, ver, emitted)),)
-            )
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows, columns=["user_id", "stage", "ver"]
-            )
+                out.append((user, stage, ver))
+        return (stage, t0, t1, ver, emitted), out
 
-    return df.groupBy("user_id").applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        df, "user_id", out_schema, lambda: (0, None, None, 0, -1), fold
     )
 
 
@@ -282,49 +189,20 @@ def count_windows_stream(df: DataFrame, n: int = 20) -> DataFrame:
     (user_id, win_id, sum_value, n_events). State per key is one open
     window (win_idx, count, running sum) — O(keys), unbounded streams
     safe."""
-    import pandas as pd
-
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     out_schema = "user_id long, win_id long, sum_value double, n_events long"
 
-    def runner(key, pdfs, state):
-        user = key[0]
-        if state.exists:
-            (blob,) = state.get
-            win_idx, cnt, total = cloudpickle.loads(bytes(blob))
-        else:
-            win_idx, cnt, total = 0, 0, 0.0
-        # applyInPandasWithState guarantees no intra-group ORDER, only
-        # grouping: sort this batch's rows by event time before folding
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if len(rows):
-            rows = rows.sort_values(["ts", "event_id"] if "event_id" in rows else ["ts"])
+    def fold(user, rows, state):
+        win_idx, cnt, total = state
         fired = []
-        for value in rows["value"] if len(rows) else []:
+        for value in rows["value"]:
             cnt += 1
             total += float(value)
             if cnt == n:
                 fired.append((user, win_idx, total, n))
                 win_idx, cnt, total = win_idx + 1, 0, 0.0
-        state.update((cloudpickle.dumps((win_idx, cnt, total)),))
-        if fired:
-            yield pd.DataFrame(
-                fired, columns=["user_id", "win_id", "sum_value", "n_events"]
-            )
-        else:
-            yield pd.DataFrame(
-                {c.split()[0]: pd.Series(dtype="object") for c in out_schema.split(",")}
-            )
+        return (win_idx, cnt, total), fired
 
-    return df.groupBy("user_id").applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(df, "user_id", out_schema, lambda: (0, 0, 0.0), fold)
 
 
 def topk_stream(df: DataFrame, k: int = 3) -> DataFrame:
@@ -334,43 +212,18 @@ def topk_stream(df: DataFrame, k: int = 3) -> DataFrame:
     the current top-k with a monotonically increasing `ver` each time a
     key sees data; downstream takes max(ver) per key for the final
     answer (memory-sink append mode has no retraction)."""
-    import pandas as pd
-
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     out_schema = "event_type string, event_id long, value double, ver long"
 
-    def runner(key, pdfs, state):
-        etype = key[0]
-        if state.exists:
-            (blob,) = state.get
-            top, ver = cloudpickle.loads(bytes(blob))
-        else:
-            top, ver = [], 0
-        for pdf in pdfs:
-            for event_id, value in zip(pdf["event_id"], pdf["value"]):
-                top.append((-float(value), int(event_id)))
-                top.sort()
-                del top[k:]
+    def fold(etype, rows, state):
+        top, ver = state
+        for event_id, value in zip(rows["event_id"], rows["value"]):
+            top.append((-float(value), int(event_id)))
+            top.sort()
+            del top[k:]
         ver += 1
-        state.update((cloudpickle.dumps((top, ver)),))
-        yield pd.DataFrame(
-            {
-                "event_type": [etype] * len(top),
-                "event_id": [eid for _, eid in top],
-                "value": [-nv for nv, _ in top],
-                "ver": [ver] * len(top),
-            }
-        )
+        return (top, ver), [(etype, eid, -nv, ver) for nv, eid in top]
 
-    return df.groupBy("event_type").applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(df, "event_type", out_schema, lambda: ([], 0), fold)
 
 
 def interarrival_stream(df: DataFrame) -> DataFrame:
@@ -381,28 +234,14 @@ def interarrival_stream(df: DataFrame) -> DataFrame:
     takes max(ver) per key."""
     import pandas as pd
 
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     out_schema = (
         "user_id long, n_gaps long, total_gap_s double,"
         " min_gap_s double, max_gap_s double, ver long"
     )
 
-    def runner(key, pdfs, state):
-        user = key[0]
-        if state.exists:
-            (blob,) = state.get
-            last_s, n, tot, mn, mx, ver = cloudpickle.loads(bytes(blob))
-        else:
-            last_s, n, tot, mn, mx, ver = None, 0, 0.0, None, None, 0
-        # sort: intra-group batch order is not a Spark contract
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if len(rows):
-            rows = rows.sort_values(
-                ["ts", "event_id"] if "event_id" in rows else ["ts"]
-            )
-        for ts in rows["ts"] if len(rows) else []:
+    def fold(user, rows, state):
+        last_s, n, tot, mn, mx, ver = state
+        for ts in rows["ts"]:
             # µs-exact double seconds, matching Spark's
             # cast(ts as double): ns epoch exceeds 2^53 so divide
             # from the µs integer, not the ns one
@@ -415,29 +254,11 @@ def interarrival_stream(df: DataFrame) -> DataFrame:
                 mx = gap if mx is None else max(mx, gap)
             last_s = s
         ver += 1
-        state.update((cloudpickle.dumps((last_s, n, tot, mn, mx, ver)),))
-        if n:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user],
-                    "n_gaps": [n],
-                    "total_gap_s": [tot],
-                    "min_gap_s": [mn],
-                    "max_gap_s": [mx],
-                    "ver": [ver],
-                }
-            )
-        else:
-            yield pd.DataFrame(
-                {c.split()[0].strip(): pd.Series(dtype="object") for c in out_schema.split(",")}
-            )
+        out = [(user, n, tot, mn, mx, ver)] if n else []
+        return (last_s, n, tot, mn, mx, ver), out
 
-    return df.groupBy("user_id").applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        df, "user_id", out_schema, lambda: (None, 0, 0.0, None, None, 0), fold
     )
 
 
@@ -452,47 +273,18 @@ def running_total_stream(df: DataFrame, threshold: float = 2000.0) -> DataFrame:
     (Python round() is banker's, Spark's is HALF_UP)."""
     import pandas as pd
 
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     out_schema = "user_id long, event_id long, ts_epoch long, running_value double"
 
-    def runner(key, pdfs, state):
-        user = key[0]
-        if state.exists:
-            (blob,) = state.get
-            running = cloudpickle.loads(bytes(blob))
-        else:
-            running = 0.0
-        # sort: intra-group batch order is not a Spark contract
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if len(rows):
-            rows = rows.sort_values(["ts", "event_id"])
+    def fold(user, rows, running):
         fired = []
-        for event_id, ts, value in (
-            zip(rows["event_id"], rows["ts"], rows["value"]) if len(rows) else []
-        ):
+        for event_id, ts, value in zip(rows["event_id"], rows["ts"], rows["value"]):
             running += float(value)
             if running > threshold:
                 epoch_s = (pd.Timestamp(ts).value // 1000) // 1_000_000
                 fired.append((user, int(event_id), int(epoch_s), running))
-        state.update((cloudpickle.dumps(running),))
-        if fired:
-            yield pd.DataFrame(
-                fired, columns=["user_id", "event_id", "ts_epoch", "running_value"]
-            )
-        else:
-            yield pd.DataFrame(
-                {c.split()[0]: pd.Series(dtype="object") for c in out_schema.split(",")}
-            )
+        return running, fired
 
-    return df.groupBy("user_id").applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(df, "user_id", out_schema, lambda: 0.0, fold)
 
 
 def transitions_stream(df: DataFrame) -> DataFrame:
@@ -507,42 +299,17 @@ def transitions_stream(df: DataFrame) -> DataFrame:
     Markov matrix itself is one aggregate over this lane's output —
     counts are mergeable, so a consumer folds micro-batch increments
     without reprocessing."""
-    import pandas as pd
-
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     out_schema = "user_id long, src string, dst string"
 
-    def runner(key, pdfs, state):
-        user = key[0]
-        last = None
-        if state.exists:
-            (blob,) = state.get
-            last = cloudpickle.loads(bytes(blob))
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if len(rows):
-            rows = rows.sort_values(["ts", "event_id"])
+    def fold(user, rows, last):
         out = []
-        for et in rows["event_type"] if len(rows) else []:
+        for et in rows["event_type"]:
             if last is not None:
                 out.append((user, last, et))
             last = str(et)
-        state.update((cloudpickle.dumps(last),))
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "src", "dst"])
-        else:
-            yield pd.DataFrame(
-                {c.split()[0]: pd.Series(dtype="object") for c in out_schema.split(",")}
-            )
+        return last, out
 
-    return df.groupBy("user_id").applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(df, "user_id", out_schema, lambda: None, fold)
 
 
 def attribution_stream(df: DataFrame) -> DataFrame:
@@ -559,27 +326,11 @@ def attribution_stream(df: DataFrame) -> DataFrame:
     delivery (count_windows_stream contract)."""
     import math
 
-    import pandas as pd
-
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     out_schema = "user_id long, channel string, cents long"
 
-    def runner(key, pdfs, state):
-        user = key[0]
-        last = None
-        if state.exists:
-            (blob,) = state.get
-            last = cloudpickle.loads(bytes(blob))
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if len(rows):
-            rows = rows.sort_values(["ts", "event_id"])
+    def fold(user, rows, last):
         out = []
-        it = (
-            zip(rows["event_type"], rows["value"]) if len(rows) else []
-        )
-        for et, val in it:
+        for et, val in zip(rows["event_type"], rows["value"]):
             if et == "purchase":
                 out.append(
                     (user, last if last is not None else "direct",
@@ -587,21 +338,9 @@ def attribution_stream(df: DataFrame) -> DataFrame:
                 )
             else:
                 last = str(et)
-        state.update((cloudpickle.dumps(last),))
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "channel", "cents"])
-        else:
-            yield pd.DataFrame(
-                {c.split()[0]: pd.Series(dtype="object") for c in out_schema.split(",")}
-            )
+        return last, out
 
-    return df.groupBy("user_id").applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(df, "user_id", out_schema, lambda: None, fold)
 
 
 def sliding_windows_stream(df: DataFrame, watermark: str | None = "1 minute") -> DataFrame:
@@ -1807,27 +1546,15 @@ def cusum_alarm_stream(
     State per key is two longs + a counter — O(types), unbounded-
     stream safe; assumes per-key in-order delivery (the
     transitions_stream contract)."""
-    import pandas as pd
-
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    import math
 
     out_schema = (
         "event_type string, ts timestamp, t long, side string, s_milli long"
     )
 
-    def runner(key, pdfs, state):
-        et = key[0]
-        s_pos, s_neg, t = 0, 0, 0
-        if state.exists:
-            (blob,) = state.get
-            s_pos, s_neg, t = cloudpickle.loads(bytes(blob))
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if len(rows):
-            rows = rows.sort_values(["ts", "event_id"])
+    def fold(et, rows, state):
+        s_pos, s_neg, t = state
         out = []
-        import math
-
         for ts, val in zip(rows["ts"], rows["value"]):
             x = int(math.floor(1000 * val))
             t += 1
@@ -1839,26 +1566,9 @@ def cusum_alarm_stream(
             elif s_neg > h_milli:
                 out.append((et, ts, t, "down", s_neg))
                 s_pos, s_neg = 0, 0
-        state.update((cloudpickle.dumps((s_pos, s_neg, t)),))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["event_type", "ts", "t", "side", "s_milli"]
-            )
-        else:
-            yield pd.DataFrame(
-                {
-                    c.strip().split()[0]: pd.Series(dtype="object")
-                    for c in out_schema.split(",")
-                }
-            )
+        return (s_pos, s_neg, t), out
 
-    return df.groupBy("event_type").applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(df, "event_type", out_schema, lambda: (0, 0, 0), fold)
 
 
 def linededup_against_corpus_foreach_batch(spark, segs_path: str, out_path: str):
@@ -2135,68 +1845,35 @@ def ewma_stream(df: DataFrame, k: int = 8) -> DataFrame:
     State per key is k longs + a counter — O(users), unbounded-stream
     safe; assumes per-key in-order delivery (the cusum_alarm_stream
     contract)."""
-    import pandas as pd
-
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    import math
 
     out_schema = (
         "user_id long, n_events long, ewma_cents long, "
         "last_cents long, ratio_bp long"
     )
 
-    def runner(key, pdfs, state):
-        uid = key[0]
-        ring, n = [], 0  # ring: newest-first v_cents, len <= k
-        if state.exists:
-            (blob,) = state.get
-            ring, n = cloudpickle.loads(bytes(blob))
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if len(rows):
-            rows = rows.sort_values(["ts", "event_id"])
-        import math
-
+    def fold(uid, rows, state):
+        ring, n = state  # ring: newest-first v_cents, len <= k
         for val in rows["value"]:
             ring.insert(0, int(math.floor(val * 100.0 + 0.5)))
             del ring[k:]
             n += 1
-        state.update((cloudpickle.dumps((ring, n)),))
-        if ring:
-            ws = sum((1 << (k - 1 - j)) * v for j, v in enumerate(ring))
-            w = sum(1 << (k - 1 - j) for j in range(len(ring)))
-            # exact trunc-toward-zero div, matching Spark's `div`
-            ewma = ws // w if ws >= 0 else -((-ws) // w)
-            if ewma == 0:
-                ratio = None
-            else:
-                num = 10000 * ring[0]
-                ratio = (
-                    num // ewma
-                    if (num >= 0) == (ewma > 0)
-                    else -((-num) // ewma if num < 0 else num // (-ewma))
-                )
-            yield pd.DataFrame(
-                [(uid, n, ewma, ring[0], ratio)],
-                columns=[
-                    "user_id", "n_events", "ewma_cents",
-                    "last_cents", "ratio_bp",
-                ],
-            )
+        ws = sum((1 << (k - 1 - j)) * v for j, v in enumerate(ring))
+        w = sum(1 << (k - 1 - j) for j in range(len(ring)))
+        # exact trunc-toward-zero div, matching Spark's `div`
+        ewma = ws // w if ws >= 0 else -((-ws) // w)
+        if ewma == 0:
+            ratio = None
         else:
-            yield pd.DataFrame(
-                {
-                    c.strip().split()[0]: pd.Series(dtype="object")
-                    for c in out_schema.split(",")
-                }
+            num = 10000 * ring[0]
+            ratio = (
+                num // ewma
+                if (num >= 0) == (ewma > 0)
+                else -((-num) // ewma if num < 0 else num // (-ewma))
             )
+        return (ring, n), [(uid, n, ewma, ring[0], ratio)]
 
-    return df.groupBy("user_id").applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(df, "user_id", out_schema, lambda: ([], 0), fold)
 
 
 def markov_foreach_batch(spark, counts_path: str, out_path: str):
@@ -2297,22 +1974,10 @@ def conversion_lag_stream(df: DataFrame, gap_s: int = 600) -> DataFrame:
     whole-minute trunc division; the session boundary compares
     double-seconds differences like the batch window does. Assumes
     per-key in-order delivery (the cusum_alarm_stream contract)."""
-    import pandas as pd
-
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     out_schema = "user_id long, lag_min long"
 
-    def runner(key, pdfs, state):
-        uid = key[0]
-        start_ns, last_ns, converted = None, None, False
-        if state.exists:
-            (blob,) = state.get
-            start_ns, last_ns, converted = cloudpickle.loads(bytes(blob))
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if len(rows):
-            rows = rows.sort_values(["ts", "event_id"])
+    def fold(uid, rows, state):
+        start_ns, last_ns, converted = state
         out = []
         for ts, et in zip(rows["ts"], rows["event_type"]):
             ns = ts.value
@@ -2323,23 +1988,10 @@ def conversion_lag_stream(df: DataFrame, gap_s: int = 600) -> DataFrame:
                 lag_s = ns // 1_000_000_000 - start_ns // 1_000_000_000
                 out.append((uid, lag_s // 60))
                 converted = True
-        state.update((cloudpickle.dumps((start_ns, last_ns, converted)),))
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "lag_min"])
-        else:
-            yield pd.DataFrame(
-                {
-                    c.strip().split()[0]: pd.Series(dtype="object")
-                    for c in out_schema.split(",")
-                }
-            )
+        return (start_ns, last_ns, converted), out
 
-    return df.groupBy("user_id").applyInPandasWithState(
-        runner,
-        outputStructType=out_schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        df, "user_id", out_schema, lambda: (None, None, False), fold
     )
 
 
